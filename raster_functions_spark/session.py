@@ -7,11 +7,34 @@ timezone (required for DuckDB-oracle comparisons), and BLAS/OMP pinned to one
 thread per task so NumPy kernels inside Arrow batches don't oversubscribe
 cores (the reference pins BLAS threads the same way:
 /root/reference/functions/LandsatMedianImage.py:4-9).
+
+Python worker fixed cost. Before every task PySpark's worker calls
+``importlib.invalidate_caches()`` (``pyspark.worker_util.setup_spark_files``),
+which reaches every ``zipimporter`` in ``sys.path_importer_cache``. On
+CPython 3.11 ``zipimporter.invalidate_caches`` eagerly re-parses the
+archive's whole central directory; 3.12 made the re-read lazy. A worker
+running an engine task holds 18 zipimporters: 12 on ``pyspark.zip``
+(1,328 entries each), 2 on the ``spark-core`` jar (5,359 each), 2 on
+``py4j`` and 2 on the engine's own zip, so every task re-parsed about
+26.8k entries: 0.2-0.37 CPU-s a task on a 4-core box (0.28 s median in
+a reused worker) before the UDF saw its first batch. The package
+``__init__`` therefore installs, once per worker, a
+``zipimporter.invalidate_caches`` that re-reads an archive only
+when its ``(mtime_ns, size)`` changed. It is installed only under
+CPython < 3.12 (newer interpreters have no eager re-read to remove) and
+only inside a task (``TaskContext.get()`` is set): the driver, where
+packages and jars may be rebuilt in place, keeps stock ``zipimport``.
+Every engine ``mapInPandas`` closure refers to engine module globals,
+which pickle by reference, so unpickling it imports the package, and
+with it the guard, before the first batch.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -59,7 +82,8 @@ def get_spark(app_name: str = "raster_functions_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -74,6 +98,20 @@ def get_spark(app_name: str = "raster_functions_spark",
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half of physical memory in whole
+    GiB, at least 1g and at most 48g. A flat 48g heap let a 20k-AOI local
+    run grow until the kernel OOM-killed it on a 15 GB box.
+    ``phys_bytes=None`` reads this machine's memory; where it cannot be
+    read the 48g cap applies."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):
+            return "48g"
+    return f"{min(48, max(1, (phys_bytes // 2) >> 30))}g"
 
 
 def ensure_min_parallelism(df, bytes_per_core: int = 4 * 1024 * 1024):
@@ -115,9 +153,12 @@ def package_zip(path: str | None = None) -> str:
     """Zip this package for ``spark-submit --py-files`` / ``addPyFile``.
 
     The north rule requires the engine to run via ``spark-submit
-    --py-files`` on multi-executor clusters; this builds that artifact."""
+    --py-files`` on multi-executor clusters; this builds that artifact.
+    ``path=None`` writes into this process's own temporary directory
+    (removed at exit), so concurrent driver processes never overwrite
+    each other's zip."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = path or os.path.join(tempfile.gettempdir(), "raster_functions_spark.zip")
+    out = path or _process_zip_path()
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
@@ -131,21 +172,42 @@ def package_zip(path: str | None = None) -> str:
     return out
 
 
+@functools.cache
+def _process_zip_path() -> str:
+    d = tempfile.mkdtemp(prefix="raster_functions_spark-")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return os.path.join(d, "raster_functions_spark.zip")
+
+
+# applicationIds of the SparkContexts that already hold the shipped files
+_shipped: set[str] = set()
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers regardless of
     the driver's cwd (equivalent of launching with --py-files). The repo's
     `__spark_entry__.py` ships too when present: its module-level helpers
     (per-tile stat lambdas) are pickled BY REFERENCE into mapInPandas
     closures, so executors must be able to import the module even when the
-    driver was launched from another directory."""
+    driver was launched from another directory.
+
+    Ships once per SparkContext: Spark ignores a re-added path (with a
+    WARN), so later calls on the same context return at once. A context
+    where an add failed is retried on the next call."""
+    sc = spark.sparkContext
+    if sc.applicationId in _shipped:
+        return
+    ok = True
     try:
-        spark.sparkContext.addPyFile(package_zip())
+        sc.addPyFile(package_zip())
     except Exception:
-        pass  # already added in this context, or non-local FS restrictions
+        ok = False  # non-local FS restrictions
     entry = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                          "__spark_entry__.py")
     if os.path.exists(entry):
         try:
-            spark.sparkContext.addPyFile(entry)
+            sc.addPyFile(entry)
         except Exception:
-            pass
+            ok = False
+    if ok:
+        _shipped.add(sc.applicationId)
